@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from kafka_streaming_spark.ops.dedup import prune_in_list
+from kafka_streaming_spark.ops.dedup import prune_in_list, prune_values
 
 #: Regexes over the cdf file name (see module docstring).
 _VERSION_RE = r"/v(\d+)_"
@@ -271,23 +271,33 @@ class ParquetUpsertTable:
         already guarantees key uniqueness (the medallion pipeline's
         dropDuplicatesWithinWatermark does exactly this; replayed/cross-
         batch duplicates are still caught by the anti-join).
+
+        With ``prune_col`` the batch's distinct ``prune_col`` values are
+        collected ONCE: the list prunes the probe and doubles as the
+        empty-batch check.  An empty batch commits nothing — no file in
+        ``data/append`` or ``cdf/`` — and returns without writing.
         """
+        values = None
+        if prune_col is not None:
+            values = prune_values(batch, prune_col)
+            if not values:
+                return
         deduped = batch if batch_unique else batch.dropDuplicates(self.keys)
         if self._has_append_data():
             current = self.read().select(*self.keys)
             if prune_col is not None:
-                current = prune_in_list(current, batch, prune_col)
+                current = prune_in_list(current, batch, prune_col, values)
             fresh = (
                 deduped.join(current, on=self.keys, how="left_anti")
                 .select(*[f.name for f in self.schema.fields])
             )
         else:
             # First backfill batch: the probe side is EMPTY, so the
-            # prune-collect job and the anti-join are pure overhead —
-            # every deduped row is fresh by construction.  A driver-side
-            # fs check (no data files yet) replaces two Spark jobs on the
-            # pipeline's dominant first micro-batch; the anti-join path
-            # is unchanged for every subsequent commit.
+            # probe read and the anti-join are pure overhead — every
+            # deduped row is fresh by construction.  A driver-side fs
+            # check (no data files yet) skips them on the pipeline's
+            # dominant first micro-batch; the anti-join path is unchanged
+            # for every subsequent commit.
             fresh = deduped.select(*[f.name for f in self.schema.fields])
         # Stage → rename: never write into a directory the plan is reading
         # (the staged write materializes the anti-join; the rename is the
@@ -402,16 +412,19 @@ class ParquetUpsertTable:
         # routing filters (gold.py:57 / tomongo.py:26 shapes) run
         # against real preimage rows, not just inserts.  Both state
         # reads are first PRUNED to the changed keys (IN-list when the
-        # keyset is tiny, semi-join fallback — F3): at scale a commit
-        # touching k of N keys reads ~k rows of prior state via
-        # row-group skipping, not the whole table.
+        # keyset is tiny, semi-join fallback — F3), by one collect of the
+        # changed-key list: at scale a commit touching k of N keys reads
+        # ~k rows of prior state via row-group skipping, not the whole
+        # table.
         key0 = self.keys[0]
+        key_values = prune_values(keyset, key0)
         prior = prune_in_list(
             self.read_buckets(bucket_ids, before_version=version),
             keyset,
             key0,
+            key_values,
         )
-        post_src = prune_in_list(committed, keyset, key0)
+        post_src = prune_in_list(committed, keyset, key0, key_values)
         if len(self.keys) > 1:
             prior = prior.join(keyset, self.keys, "left_semi")
             post_src = post_src.join(keyset, self.keys, "left_semi")

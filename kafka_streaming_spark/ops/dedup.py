@@ -63,7 +63,26 @@ def first_seen(
     )
 
 
-def prune_in_list(target: DataFrame, source: DataFrame, prune_col: str) -> DataFrame:
+#: Largest value list ``prune_in_list`` splices into the plan as a literal
+#: IN-list; more values fall back to a broadcast semi-join (A3).
+IN_LIST_MAX = 1000
+
+
+def prune_values(source: DataFrame, prune_col: str) -> list:
+    """The distinct ``prune_col`` values of ``source``, collected to the
+    driver: at most ``IN_LIST_MAX + 1`` of them, enough to tell an IN-list
+    from a semi-join prune.  Callers that prune several targets by the same
+    source, or that need the values themselves, collect once here and pass
+    the list to :func:`prune_in_list`."""
+    return [
+        r[0]
+        for r in source.select(prune_col).distinct().limit(IN_LIST_MAX + 1).collect()
+    ]
+
+
+def prune_in_list(
+    target: DataFrame, source: DataFrame, prune_col: str, values: list | None = None
+) -> DataFrame:
     """F3: restrict ``target`` to the partitions/buckets present in
     ``source`` before joining (silver.py:22-28's "Prune IN List").
 
@@ -75,9 +94,13 @@ def prune_in_list(target: DataFrame, source: DataFrame, prune_col: str) -> DataF
     guarantee the reference wanted: static pruning), falling back to a
     semi-join for high-cardinality bucket sets instead of shipping a huge
     IN-list through the plan.
+
+    ``values`` is the result of :func:`prune_values` over ``source`` when
+    the caller already collected it; otherwise it is collected here.
     """
-    values = [r[0] for r in source.select(prune_col).distinct().limit(1001).collect()]
-    if len(values) <= 1000:  # A3: driver round-trip is bounded and tiny
+    if values is None:
+        values = prune_values(source, prune_col)
+    if len(values) <= IN_LIST_MAX:  # A3: driver round-trip is bounded and tiny
         return target.filter(F.col(prune_col).isin(values))
     return target.join(
         F.broadcast(source.select(prune_col).distinct()), on=prune_col, how="left_semi"

@@ -22,6 +22,14 @@ The change feeds between stages are consumed as *file streams over the cdf
 directories* — each upstream commit becomes a downstream micro-batch, which
 is exactly the incremental-view-maintenance property the reference gets from
 Delta CDF (per-trigger work ∝ delta, not history).
+
+Frame lifetimes: a foreachBatch frame is a plan over the micro-batch's
+incremental execution, and every action on it recomputes that plan — for
+``bronze_to_silver`` the source scan, the stateful dedup and its
+state-store commit.  A foreachBatch body that runs more than one action on
+its frame persists it and releases it in ``finally`` (``_silver_batch``);
+a body that reads its frame once does not (``_gold_batch`` owns only its
+cached aggregate, ``_serving_batch`` runs a single write).
 """
 
 from __future__ import annotations
@@ -103,15 +111,22 @@ class MedallionPipeline:
         ``batch_unique``: the upstream dropDuplicatesWithinWatermark already
         guarantees one row per id within a micro-batch, so the sink skips
         its own within-batch dedup shuffle (cross-batch/replay duplicates
-        are still removed by the anti-join)."""
-        if batch_df.isEmpty():
-            # watermark-dedup state eviction produces a trailing EMPTY
-            # micro-batch under availableNow; the full insert path (probe
-            # read + anti-join + parquet commit) is pure overhead for it
-            return
-        self.silver.insert_if_absent(
-            batch_df, version=batch_id, prune_col="minute_timestamp", batch_unique=True
-        )
+        are still removed by the anti-join).
+
+        The sink runs two actions on ``batch_df``: the prune collect, which
+        is also the empty-batch exit (watermark-dedup state eviction
+        produces a trailing EMPTY micro-batch under availableNow), and the
+        anti-join write.  Unpersisted, each action would re-run the source
+        scan, the stateful dedup and its state-store commit, so the body
+        persists the frame on entry and releases it in ``finally`` (the
+        module-level rule)."""
+        batch_df.persist()
+        try:
+            self.silver.insert_if_absent(
+                batch_df, version=batch_id, prune_col="minute_timestamp", batch_unique=True
+            )
+        finally:
+            batch_df.unpersist()
 
     def start_bronze_to_silver(self, events: DataFrame, available_now: bool = True):
         """``events`` must carry the EVENT_SCHEMA columns (id, group_id,

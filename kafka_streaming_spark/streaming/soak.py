@@ -106,7 +106,35 @@ def _stage_progress(query) -> dict:
         ),
         "last_batch_rows": nz[-1] if nz else 0,
         "max_batch_rows": max(nz) if nz else 0,
+        **_phase_and_state_sums(progress),
     }
+
+
+#: Micro-batch phases Spark reports in ``durationMs``, summed per stage.
+_PHASES = {
+    "add_batch_sec": "addBatch",
+    "query_planning_sec": "queryPlanning",
+    "wal_commit_sec": "walCommit",
+    "commit_offsets_sec": "commitOffsets",
+    "latest_offset_sec": "latestOffset",
+}
+
+
+def _phase_and_state_sums(progress) -> dict:
+    """Where a stage's batch wall went: the ``durationMs`` phases and the
+    state operators' commit time and updated rows, each summed over the
+    stage's micro-batches.  ``state_rows_updated`` equals the rows the
+    stateful plan admitted only when each micro-batch ran that plan once."""
+    ops = [op for p in progress for op in p.get("stateOperators", [])]
+    out = {
+        key: round(sum(int(p["durationMs"].get(phase, 0)) for p in progress) / 1000.0, 4)
+        for key, phase in _PHASES.items()
+    }
+    out["state_commit_sec"] = round(
+        sum(int(op.get("commitTimeMs", 0)) for op in ops) / 1000.0, 4
+    )
+    out["state_rows_updated"] = sum(int(op.get("numRowsUpdated", 0)) for op in ops)
+    return out
 
 
 def soak_medallion(

@@ -140,6 +140,24 @@ def test_stage_restart_under_load_keeps_fold_exact(spark, tmp_path_factory):
         assert g["last_event_timestamp"] == e["last_event_timestamp"], k
 
 
+class _FakeQuery:
+    """A query whose ``recentProgress`` holds one progress dict per batch
+    size; ``durations`` and ``state_ops`` (per batch) fill in the phase
+    times and the state operators."""
+
+    def __init__(self, sizes, durations=None, state_ops=None):
+        durations = durations or [{}] * len(sizes)
+        state_ops = state_ops or [[]] * len(sizes)
+        self.recentProgress = [
+            {
+                "numInputRows": s,
+                "durationMs": {"triggerExecution": 100, **d},
+                "stateOperators": ops,
+            }
+            for s, d, ops in zip(sizes, durations, state_ops)
+        ]
+
+
 def test_stage_progress_short_run_skips_ramp_batch():
     """ADVICE r8: with 2-3 non-empty batches ``len(nz)//4 == 0`` made the
     steady window exactly the FIRST (ramp) batch, so the divergence check
@@ -147,13 +165,6 @@ def test_stage_progress_short_run_skips_ramp_batch():
     floor must exclude batch 0 whenever more than one non-empty batch
     exists."""
     from kafka_streaming_spark.streaming.soak import _stage_progress
-
-    class _FakeQuery:
-        def __init__(self, sizes):
-            self.recentProgress = [
-                {"numInputRows": s, "durationMs": {"triggerExecution": 100}}
-                for s in sizes
-            ]
 
     # Ramp batch of 10 rows, then two healthy 100-row batches: steady
     # must anchor on the post-ramp batches, never the ramp batch.
@@ -172,3 +183,38 @@ def test_stage_progress_short_run_skips_ramp_batch():
     # Long run unchanged: second quarter of 8 non-empty batches.
     m8 = _stage_progress(_FakeQuery([1, 2, 3, 4, 5, 6, 7, 8]))
     assert m8["steady_batch_rows"] in (3, 4)
+
+
+def test_stage_progress_sums_phases_and_state_operators():
+    """Each stage's summary also sums the micro-batch phases and the state
+    operators' commit time and updated rows; the batch-size keys and the
+    values ``kept_up`` reads are unchanged by the additions."""
+    from kafka_streaming_spark.streaming.soak import _stage_progress
+
+    durations = [
+        {"addBatch": 500, "queryPlanning": 20, "walCommit": 10,
+         "commitOffsets": 5, "latestOffset": 2},
+        {"addBatch": 250, "queryPlanning": 30, "walCommit": 10},
+        {},
+    ]
+    state_ops = [
+        [{"commitTimeMs": 40, "numRowsUpdated": 10}],
+        [{"commitTimeMs": 60, "numRowsUpdated": 100},
+         {"commitTimeMs": 5, "numRowsUpdated": 1}],
+        [],
+    ]
+    m = _stage_progress(_FakeQuery([10, 100, 0], durations, state_ops))
+    assert m["add_batch_sec"] == pytest.approx(0.75)
+    assert m["query_planning_sec"] == pytest.approx(0.05)
+    assert m["wal_commit_sec"] == pytest.approx(0.02)
+    assert m["commit_offsets_sec"] == pytest.approx(0.005)
+    assert m["latest_offset_sec"] == pytest.approx(0.002)
+    assert m["state_commit_sec"] == pytest.approx(0.105)
+    assert m["state_rows_updated"] == 111
+    plain = _stage_progress(_FakeQuery([10, 100, 0]))
+    for key in ("batches", "input_rows", "mean_batch_sec", "max_batch_sec",
+                "median_batch_rows", "steady_batch_rows", "equil_batch_rows",
+                "last_batch_rows", "max_batch_rows"):
+        assert m[key] == plain[key], key
+    assert plain["state_rows_updated"] == 0
+    assert plain["add_batch_sec"] == 0.0

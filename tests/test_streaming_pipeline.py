@@ -1806,3 +1806,105 @@ def test_tws_event_time_sessions_late_merge(spark, tmp_path_factory):
         .awaitTermination()
     )
     assert ("a", 6_000, 12_000, 3, 6.0) in finalized
+
+
+def _generator_backlog(spark, root):
+    """A small seeded publish-daemon backlog with within-batch duplicates,
+    written as four event-time-ordered files under ``root/source``."""
+    from kafka_streaming_spark.io.generator import EventGenerator
+
+    rows = EventGenerator(seed=23, workers=4, duplicate_every=7).rows(100)
+    src = f"{root}/source"
+    _write_event_source(spark, spark.createDataFrame(rows, schema=EVENT_SCHEMA), src)
+    return rows, src
+
+
+def test_silver_stateful_plan_runs_once_per_micro_batch(spark, tmp_path_factory):
+    """The silver foreachBatch body runs several actions on its frame (the
+    prune collect, the anti-join write).  Each action on an unpersisted
+    frame re-runs the micro-batch's stateful dedup and its state commit, so
+    the dedup's ``numRowsUpdated`` summed over the query's batches would
+    exceed the rows admitted to silver (~1.9x before the frame was
+    persisted).  Run once, the two are equal."""
+    from kafka_streaming_spark.io.sources import file_stream
+
+    root = str(tmp_path_factory.mktemp("silver_once"))
+    rows, src = _generator_backlog(spark, root)
+    pipe = MedallionPipeline(spark, f"{root}/tables")
+    stream = file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
+    q = pipe.start_bronze_to_silver(stream, available_now=True)
+    q.awaitTermination()
+
+    silver_rows = pipe.silver.read().count()
+    assert silver_rows == len({r[0] for r in rows}) < len(rows)
+    progress = q.recentProgress
+    assert sum(1 for p in progress if p["numInputRows"] > 0) > 1
+    updated = sum(op["numRowsUpdated"] for p in progress for op in p["stateOperators"])
+    assert updated == silver_rows
+
+
+def test_foreach_batch_frames_release_cached_blocks(spark, tmp_path_factory, monkeypatch):
+    """ROADMAP aim 3: a long-lived session must not leak cached blocks.
+    After a full availableNow drain, and after a silver body whose insert
+    raises, the session's persistent-RDD count is back where it started."""
+    from kafka_streaming_spark.io.sources import file_stream
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+
+    root = str(tmp_path_factory.mktemp("no_leak"))
+    rows, src = _generator_backlog(spark, root)
+    pipe = MedallionPipeline(spark, f"{root}/tables")
+    pipe.run_available_now(file_stream(spark, src, EVENT_SCHEMA, max_files_per_trigger=1))
+    assert pipe.serving_view().count() == 4
+    assert jsc.getPersistentRDDs().size() == before
+
+    def failing_insert(batch, **_kwargs):
+        assert batch.is_cached
+        batch.count()  # materialize the cached frame before failing
+        raise RuntimeError("insert failed")
+
+    monkeypatch.setattr(pipe.silver, "insert_if_absent", failing_insert)
+    frame = derive_event_columns(spark.createDataFrame(rows[:20], schema=EVENT_SCHEMA))
+    frame = frame.select(*[f.name for f in pipe.silver.schema.fields])
+    with pytest.raises(RuntimeError, match="insert failed"):
+        pipe._silver_batch(frame, batch_id=99)
+    assert not frame.is_cached
+    assert jsc.getPersistentRDDs().size() == before
+
+
+def test_insert_if_absent_empty_batch_commits_nothing(spark, tmp_path_factory):
+    """The prune collect is the empty-batch exit: an empty batch — first or
+    later — commits no file to ``data/append`` or ``cdf/``."""
+    import os
+
+    from kafka_streaming_spark.io.sinks import ParquetUpsertTable
+    from kafka_streaming_spark.schemas import SILVER_SCHEMA
+
+    root = str(tmp_path_factory.mktemp("empty_insert"))
+    table = ParquetUpsertTable(
+        spark, f"{root}/silver", SILVER_SCHEMA, keys=("minute_timestamp", "id")
+    )
+    append_dir, cdf_dir = f"{root}/silver/data/append", table.cdf_dir
+
+    def files():
+        listed = os.listdir(append_dir) if os.path.isdir(append_dir) else []
+        return sorted(listed), sorted(os.listdir(cdf_dir))
+
+    empty = spark.createDataFrame([], SILVER_SCHEMA)
+    table.insert_if_absent(empty, version=0, prune_col="minute_timestamp")
+    assert files() == ([], [])
+
+    base_ms = 1_700_000_000_000
+    events = spark.createDataFrame(
+        [("a", "g1", 1.0, base_ms), ("b", "g2", 2.0, base_ms + 61_000)],
+        schema=EVENT_SCHEMA,
+    )
+    rows = derive_event_columns(events).select(*[f.name for f in SILVER_SCHEMA.fields])
+    table.insert_if_absent(rows, version=1, prune_col="minute_timestamp")
+    committed = files()
+    assert committed[0] and committed[1]
+
+    table.insert_if_absent(empty, version=2, prune_col="minute_timestamp")
+    assert files() == committed
+    assert table.read().count() == 2

@@ -52,20 +52,34 @@ def parse_variant(spec: str) -> dict[str, str]:
     return out
 
 
-def apply_variant(spark, conf: dict[str, str]) -> None:
+def apply_variant(spark, conf: dict[str, str]) -> dict[str, str | None]:
+    """Set a variant's confs and env vars.  Returns each key's value from
+    before the variant (None when it had none), for :func:`clear_variant`."""
+    prior: dict[str, str | None] = {}
     for k, v in conf.items():
         if k.startswith("env:"):
+            prior[k] = os.environ.get(k[4:])
             os.environ[k[4:]] = v
         else:
+            prior[k] = spark.conf.get(k, None)
             spark.conf.set(k, v)
+    return prior
 
 
-def clear_variant(spark, conf: dict[str, str]) -> None:
-    for k in conf:
+def clear_variant(spark, prior: dict[str, str | None]) -> None:
+    """Undo :func:`apply_variant`: put back the value each key had before
+    the variant.  Unsetting instead would drop a session value (one of
+    ``session.BASE_CONF``'s) to Spark's default for every later variant."""
+    for k, v in prior.items():
         if k.startswith("env:"):
-            os.environ.pop(k[4:], None)
-        else:
+            if v is None:
+                os.environ.pop(k[4:], None)
+            else:
+                os.environ[k[4:]] = v
+        elif v is None:
             spark.conf.unset(k)
+        else:
+            spark.conf.set(k, v)
 
 
 def main() -> None:
@@ -169,7 +183,7 @@ def main() -> None:
     best: list[dict[str, float]] = [dict() for _ in variants]
     for _ in range(args.repeat):
         for vi, conf in enumerate(variants):
-            apply_variant(spark, conf)
+            prior = apply_variant(spark, conf)
             vtot = 0.0
             for name in names:
                 el = run_one(name)
@@ -177,7 +191,7 @@ def main() -> None:
                 best[vi][name] = min(best[vi].get(name, float("inf")), el)
             print(json.dumps({"variant": args.variant[vi] if args.variant else "base",
                               "pass_sec": round(vtot, 3)}), flush=True)
-            clear_variant(spark, conf)
+            clear_variant(spark, prior)
 
     for vi, timings in enumerate(best):
         label = args.variant[vi] if args.variant else "base"
