@@ -93,8 +93,8 @@ def bench_streaming(spark) -> tuple[float, int]:
         pipe = MedallionPipeline(spark, f"{TMP}/tables_{tag}", watermark_delay="40 days")
         t0 = time.perf_counter()
         pipe.start_bronze_to_silver(stream, available_now=True).awaitTermination()
-        pipe.start_silver_to_gold(available_now=True, max_files_per_trigger=32).awaitTermination()
-        pipe.start_gold_to_serving(available_now=True, max_files_per_trigger=32).awaitTermination()
+        pipe.start_silver_to_gold(available_now=True).awaitTermination()
+        pipe.start_gold_to_serving(available_now=True).awaitTermination()
         return time.perf_counter() - t0
 
     elapsed = min(one_run("a"), one_run("b"), one_run("c"))

@@ -492,10 +492,10 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             if np.array_equal(lo, label[ia]) and np.array_equal(lo, label[ib]):
                 break
         label = nxt
+    # tolist() yields native Python values of the column's own type (int,
+    # str, ...) — the schema above, for any node type.
     out = np.stack([nodes, nodes[label]], axis=1)
-    return edges.sparkSession.createDataFrame(
-        [(int(r[0]), int(r[1])) for r in out], schema
-    )
+    return edges.sparkSession.createDataFrame(out.tolist(), schema)
 
 
 def dedup_clusters(
@@ -568,13 +568,11 @@ def dedup_clusters(
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    # Convergence detector: labels are monotone non-increasing per node, so
-    # the label sum strictly decreases every round that changes anything and
-    # is exactly unchanged at the fixed point.  Comparing sums replaces a
-    # new-vs-old join per round with a single aggregate; decimal(38,0) keeps
-    # the sum exact (no 64-bit wrap) for up to ~10^19 total label mass.
-    _sum_expr = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    prev_sum = labels.agg(_sum_expr).collect()[0]["s"]
+    # Convergence detector: each round carries a node's previous label
+    # (``__prev``) through its two joins and flags the nodes whose label
+    # changed; the fixed point is the first round that flags none.  One
+    # aggregate per round, no new-vs-old join, and no arithmetic on the
+    # label, so it holds for any orderable id type (strings included).
     for rnd in range(max_rounds):
         neighbor_min = (
             edges.join(labels, edges["b"] == labels["node"])
@@ -585,6 +583,7 @@ def dedup_clusters(
             labels.join(neighbor_min, labels["node"] == neighbor_min["a"], "left")
             .select(
                 "node",
+                F.col("label").alias("__prev"),
                 F.least(F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))).alias(
                     "label"
                 ),
@@ -609,17 +608,18 @@ def dedup_clusters(
                 F.least(F.col("x.label"), F.coalesce(F.col("__ll"), F.col("x.label"))).alias(
                     "label"
                 ),
+                F.col("x.__prev"),
             )
+            .select("node", "label", (F.col("label") != F.col("__prev")).alias("__changed"))
         )
         # Lazy checkpoint: the convergence aggregate below is the action
         # that materializes it — one Spark job per round, not two.
         new_labels = _materialize(new_labels, checkpoint, f"round_{rnd}", eager=False)
-        new_sum = new_labels.agg(_sum_expr).collect()[0]["s"]
+        changed = new_labels.agg(F.count_if("__changed")).collect()[0][0]
         propagated.unpersist()  # new_labels is materialized by the agg above
-        labels = new_labels
-        if new_sum == prev_sum:
+        labels = new_labels.select("node", "label")
+        if not changed:
             break
-        prev_sum = new_sum
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 
 

@@ -42,8 +42,13 @@ def file_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """File-based streaming source — the broker-free replay path for tests
-    and backfills (bounded batches via ``maxFilesPerTrigger``, the option the
-    reference *intended* at gold.py:65 — see SURVEY.md §2.2 K6)."""
+    and backfills.  ``max_files_per_trigger`` sets ``maxFilesPerTrigger``,
+    the per-trigger admission bound; unset, Spark admits every new file.
+    A bronze caller picks its own value; the pipeline's change-feed stages
+    use ``streaming.pipeline.CDF_MAX_FILES_PER_TRIGGER`` (1000, the Delta
+    source's default — the reference's gold stage ran with it because the
+    ``maxOffsetsPerTrigger`` it passes at gold.py:65 is not a Delta option,
+    SURVEY.md §2.2 K6)."""
     reader = spark.readStream.schema(schema).format(fmt)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))

@@ -19,9 +19,14 @@ pipeline runs with only pyspark; with delta-spark installed the same stages
 target real Delta tables via ``delta_utils`` (same method shapes).
 
 The change feeds between stages are consumed as *file streams over the cdf
-directories* — each upstream commit becomes a downstream micro-batch, which
-is exactly the incremental-view-maintenance property the reference gets from
-Delta CDF (per-trigger work ∝ delta, not history).
+directories*: each trigger admits every upstream change file written since
+the last one, up to ``CDF_MAX_FILES_PER_TRIGGER``.  That is the
+incremental-view-maintenance property the reference gets from Delta CDF
+(per-trigger work ∝ delta, not history), and a stage catching up on a
+backlog takes one larger micro-batch rather than many small ones.  An
+upstream commit writes one file per shuffle partition, so a per-trigger
+cap near the partition count would split each commit across several
+downstream batches, each paying a full fold and commit of the same groups.
 
 Frame lifetimes: a foreachBatch frame is a plan over the micro-batch's
 incremental execution, and every action on it recomputes that plan — for
@@ -65,11 +70,24 @@ def watermark_dedup(
     return df.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(list(keys))
 
 
-def _cdf_stream(spark, table: ParquetUpsertTable, base: StructType, max_files: int):
+# Files admitted per change-feed trigger, for gold and serving alike.  1000
+# is the Delta source's default ``maxFilesPerTrigger`` and the value the
+# reference's gold stage ran with (its ``maxOffsetsPerTrigger`` is not a
+# Delta option, gold.py:65).  It is far above one commit's file count, so
+# a trigger admits whole commits; it stays a bound so the files planned for
+# one trigger after a long outage are bounded too.  Gold's per-batch memory
+# is set by its ≤ |groups|-row aggregate, not by this bound.  A constant,
+# not an option: no caller needs another value.
+CDF_MAX_FILES_PER_TRIGGER = 1000
+
+
+def _cdf_stream(spark, table: ParquetUpsertTable, base: StructType):
     """S2/S3: stream a table's change feed — file stream over the flat cdf
     dir with metadata derived from file names (see io.sinks)."""
     os.makedirs(table.cdf_dir, exist_ok=True)
-    raw = file_stream(spark, table.cdf_dir, base, max_files_per_trigger=max_files)
+    raw = file_stream(
+        spark, table.cdf_dir, base, max_files_per_trigger=CDF_MAX_FILES_PER_TRIGGER
+    )
     return attach_cdf_metadata(raw)
 
 
@@ -202,11 +220,13 @@ class MedallionPipeline:
         finally:
             agg.unpersist()
 
-    def start_silver_to_gold(self, available_now: bool = True, max_files_per_trigger: int = 8):
-        """S2: stream the silver change feed; one upstream commit ≈ one
-        micro-batch (``maxFilesPerTrigger`` bounds batches to ~one commit,
-        the reference's bounded-batch intent at gold.py:65/K6)."""
-        cdf = _cdf_stream(self.spark, self.silver, SILVER_SCHEMA, max_files_per_trigger)
+    def start_silver_to_gold(self, available_now: bool = True):
+        """S2: stream the silver change feed.  A trigger admits every silver
+        commit made since the previous one (up to
+        ``CDF_MAX_FILES_PER_TRIGGER`` files), so a drained backlog folds
+        into gold in one micro-batch and a live stage folds whatever
+        arrived while the last batch ran."""
+        cdf = _cdf_stream(self.spark, self.silver, SILVER_SCHEMA)
         return start_foreach_batch(
             cdf,
             self._gold_batch,
@@ -228,8 +248,12 @@ class MedallionPipeline:
         )
         self.serving_writer.write(out, batch_id)
 
-    def start_gold_to_serving(self, available_now: bool = True, max_files_per_trigger: int = 16):
-        cdf = _cdf_stream(self.spark, self.gold, GOLD_SCHEMA, max_files_per_trigger)
+    def start_gold_to_serving(self, available_now: bool = True):
+        """S3: stream the gold change feed into the serving writer, admitting
+        whole gold commits per trigger as ``start_silver_to_gold`` does.
+        Several commits in one batch may carry the same ``group_id``; the
+        serving read keeps the latest (J3)."""
+        cdf = _cdf_stream(self.spark, self.gold, GOLD_SCHEMA)
         return start_foreach_batch(
             cdf,
             self._serving_batch,

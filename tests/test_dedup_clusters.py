@@ -4,6 +4,9 @@ must agree exactly with the sequential reference)."""
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kafka_streaming_spark.functions import dedup as D
@@ -49,6 +52,35 @@ def test_clusters_match_union_find(spark):
         for r in D.dedup_clusters(pairs_df, small_graph_limit=0).collect()
     }
     assert distributed == got
+
+
+@pytest.mark.parametrize(
+    "ids, ddl",
+    [
+        (st.integers(min_value=-3, max_value=20), "bigint"),
+        # mixed case, digits and a non-ASCII letter: Spark's (UTF-8 byte)
+        # and Python's (code point) string orders must pick the same minimum
+        (st.text(alphabet="aZ0é", max_size=3), "string"),
+    ],
+    ids=["int", "str"],
+)
+@given(data=st.data())
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+def test_driver_and_distributed_paths_agree(spark, ids, ddl, data):
+    """The driver-side fast path (default ``small_graph_limit``) and the
+    distributed loop (``small_graph_limit=0``) return the same rows, in the
+    id column's own type, for integer and string ids alike."""
+    pairs = data.draw(st.lists(st.tuples(ids, ids), min_size=1, max_size=15))
+    pairs_df = spark.createDataFrame(pairs, f"id_a {ddl}, id_b {ddl}")
+    fast = D.dedup_clusters(pairs_df)
+    assert [f.dataType.simpleString() for f in fast.schema.fields] == [ddl, ddl]
+    rows = sorted(map(tuple, fast.collect()))
+    assert rows == sorted(map(tuple, D.dedup_clusters(pairs_df, small_graph_limit=0).collect()))
+    assert dict(rows) == _union_find(pairs)
 
 
 def test_arrow_signatures_match_sql(spark):

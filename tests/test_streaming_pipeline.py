@@ -47,22 +47,23 @@ def pipeline_result(spark, tmp_path_factory):
     # so the lateness bound must cover intra-file disorder.
     pipe = MedallionPipeline(spark, f"{root}/tables", watermark_delay="40 days")
     pipe.start_bronze_to_silver(stream, available_now=True).awaitTermination()
-    pipe.start_silver_to_gold(available_now=True).awaitTermination()
-    pipe.start_gold_to_serving(available_now=True).awaitTermination()
-    return pipe, events
+    gold_q = pipe.start_silver_to_gold(available_now=True)
+    gold_q.awaitTermination()
+    serving_q = pipe.start_gold_to_serving(available_now=True)
+    serving_q.awaitTermination()
+    return pipe, events, (gold_q, serving_q)
 
 
 def test_silver_is_event_set(spark, pipeline_result):
     """J1 invariant: silver holds exactly the distinct (bucket, id) set."""
-    pipe, events = pipeline_result
+    pipe, events, _downstream = pipeline_result
     silver = pipe.silver.read()
     assert silver.count() == events.select("id").distinct().count()
     assert silver.groupBy("minute_timestamp", "id").count().filter("count > 1").count() == 0
 
 
-def test_gold_matches_batch_reaggregation(spark, pipeline_result):
-    """A2 ≡ A1-over-history: incremental gold equals one-shot groupBy."""
-    pipe, events = pipeline_result
+def _assert_gold_matches_reaggregation(pipe, events):
+    """Gold equals a one-shot groupBy over ``events`` (the unique events)."""
     gold = pipe.gold.read().drop("updated_at")
     expected = group_agg(
         derive_event_columns(events), keys=("group_id",), score_col="score",
@@ -79,22 +80,38 @@ def test_gold_matches_batch_reaggregation(spark, pipeline_result):
         assert g[k]["avg_score"] == pytest.approx(e[k]["avg_score"], rel=1e-9)
 
 
+def _assert_serving_equals_gold(pipe):
+    """The serving view holds exactly gold's rows, one per group."""
+    cols = pipe.gold.schema.fieldNames()
+    gold = [tuple(r) for r in pipe.gold.read().select(*cols).collect()]
+    serving = [tuple(r) for r in pipe.serving_view().select(*cols).collect()]
+    assert gold and sorted(serving) == sorted(gold)
+
+
+def test_gold_matches_batch_reaggregation(spark, pipeline_result):
+    """A2 ≡ A1-over-history: incremental gold equals one-shot groupBy."""
+    pipe, events, _downstream = pipeline_result
+    _assert_gold_matches_reaggregation(pipe, events)
+
+
 def test_gold_cdf_reaches_serving(spark, pipeline_result):
     """T4/J3: serving view has one (latest) row per group."""
-    pipe, _events = pipeline_result
-    serving = pipe.serving_view()
-    gold = pipe.gold.read()
-    assert serving.count() == gold.count()
-    merged = serving.select("_id", "event_count").join(
-        gold.select(F.col("group_id").alias("_id"), F.col("event_count").alias("gc")), "_id"
-    )
-    assert merged.filter("event_count != gc").count() == 0
+    pipe, _events, _downstream = pipeline_result
+    _assert_serving_equals_gold(pipe)
+
+
+def _drain_downstream(pipe):
+    pipe.start_silver_to_gold(available_now=True).awaitTermination()
+    pipe.start_gold_to_serving(available_now=True).awaitTermination()
 
 
 def test_checkpoint_resume_processes_only_new_files(spark, tmp_path_factory):
     """K4 exactly-once: a second availableNow run over the SAME checkpoint
     must process only files that arrived after the first run — replayed
-    history stays untouched (no duplicate inserts, stable gold counts)."""
+    history stays untouched (no duplicate inserts, stable gold counts).
+    Gold and serving drain after each bronze drain, and the second drain
+    touches the first's groups, so gold's second commit folds into prior
+    state (the non-first-commit path) and emits pre/postimages."""
     from kafka_streaming_spark.io.generator import EventGenerator
     from kafka_streaming_spark.io.sources import file_stream
 
@@ -113,6 +130,8 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path_factory):
     pipe.start_bronze_to_silver(stream, available_now=True).awaitTermination()
     n_after_first = pipe.silver.read().count()
     assert n_after_first == len({r[0] for r in first})
+    _drain_downstream(pipe)
+    assert {r[1] for r in first} & {r[1] for r in second}
 
     # new files arrive; resume from the same checkpoint
     spark.createDataFrame(second, schema=EVENT_SCHEMA).coalesce(1).write.mode(
@@ -123,6 +142,36 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path_factory):
     silver = pipe.silver.read()
     assert silver.count() == len({r[0] for r in all_rows})
     assert silver.groupBy("id").count().filter("count > 1").count() == 0
+
+    _drain_downstream(pipe)
+    unique = list({r[0]: r for r in reversed(all_rows)}.values())
+    _assert_gold_matches_reaggregation(pipe, spark.createDataFrame(unique, EVENT_SCHEMA))
+    # gold's cdf/ file names carry (version, change type); read_cdf derives
+    # the two columns from them
+    commits = pipe.gold.read_cdf().select("_commit_version", "_change_type").distinct()
+    by_version: dict[int, set[str]] = {}
+    for version, change_type in commits.collect():
+        by_version.setdefault(version, set()).add(change_type)
+    assert len(by_version) == 2
+    assert {"update_preimage", "update_postimage"} <= by_version[max(by_version)]
+    _assert_serving_equals_gold(pipe)
+
+
+def test_change_feed_stages_admit_whole_backlog(pipeline_result):
+    """Gold and serving admit whole upstream commits: the fixture's silver
+    backlog of more than 16 change files (one per shuffle partition per
+    commit) but fewer than ``CDF_MAX_FILES_PER_TRIGGER`` folds into gold in
+    ONE non-empty micro-batch and reaches serving in one more (the fixture's
+    other tests check what they wrote)."""
+    import os
+
+    from kafka_streaming_spark.streaming.pipeline import CDF_MAX_FILES_PER_TRIGGER
+
+    pipe, _events, downstream = pipeline_result
+    n_files = sum(f.endswith(".parquet") for f in os.listdir(pipe.silver.cdf_dir))
+    assert 16 < n_files < CDF_MAX_FILES_PER_TRIGGER
+    for q in downstream:
+        assert sum(1 for p in q.recentProgress if p["numInputRows"] > 0) == 1
 
 
 def test_running_counter_stateful(spark, tmp_path_factory):
